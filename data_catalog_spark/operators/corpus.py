@@ -167,6 +167,22 @@ SELECT DISTINCT a, b FROM (
 """
 
 
+# Loop control: the star-forest test as ONE grouped statement.  Each edge
+# tags its source ``a`` and its root ``b``; a node violates the star forest
+# if it is the source of two edges (``cur`` is a DISTINCT edge set, so two
+# rows mean two parents) or is both a source and a root (a depth-2 chain).
+# An empty result certifies the fixpoint.  No join: ``isEmpty()`` costs
+# two jobs, the group-by's shuffle map stage and one result job.
+_STAR_VIOLATIONS_SQL = """
+SELECT node FROM (
+  SELECT a AS node, 1 AS src, 0 AS root FROM __cc_star
+  UNION ALL
+  SELECT b AS node, 0 AS src, 1 AS root FROM __cc_star
+) t
+GROUP BY node
+HAVING sum(src) > 1 OR (sum(src) > 0 AND sum(root) > 0)"""
+
+
 def _connected_components(edges: DataFrame) -> DataFrame:
     """(node, label) with label = min node reachable through the undirected
     pair graph.  Alternating large-star/small-star (Kiveris et al. 2014):
@@ -177,26 +193,29 @@ def _connected_components(edges: DataFrame) -> DataFrame:
     converges in ~15 rounds here vs 10k there; pinned by
     tests/test_corpus.py chain stress).  localCheckpoint truncates the
     iterative lineage so plan size stays O(1) in rounds; convergence is
-    edge-set stability (two scalar counts on the already-checkpointed
-    frame).  ``edges`` must have columns (a, b), one row per pair (either
-    or both directions; self-loops and duplicates are tolerated)."""
+    the star-forest test (_STAR_VIOLATIONS_SQL).  ``edges`` must have
+    columns (a, b), one row per pair (either or both directions;
+    self-loops and duplicates are tolerated)."""
     spark = edges.sparkSession
     # normalize: undirected edge set, one (greater, lesser) row per pair.
-    # All checkpoints here are LAZY (eager=False): the per-round scalar
-    # stats statement that loop control needs is the materializing job,
-    # so each round costs ONE job — on near-star inputs (the incremental /
-    # streaming merges) driver job-submission gap dominates wall time.
+    # The checkpoints here are lazy (eager=False), but under AQE creating
+    # one still runs every shuffle map stage of its plan at once (the
+    # adaptive plan must be finalized before the RDD exists): here every
+    # exchange of the input's plan plus the distinct's, below the two
+    # window shuffles' map stages per round.  Only the final result stage
+    # waits for the round's convergence check, whose job materializes the
+    # checkpoint blocks.
     #
     # Loop control IS the star-forest test (r12): a height-1 forest in
     # which no node is both a source and a root is the fixpoint of both
     # star operations, the star ops preserve connectivity, and the
     # component minimum can never point anywhere (nothing smaller exists)
-    # — so (n == count-distinct-sources AND chain == 0) certifies the
-    # exact min-labeled closure directly.  The previous loop detected
-    # edge-set STABILITY (count + exceptAll) and then verified the star
-    # forest separately: one full extra large-star/small-star round plus
-    # two extra driver-blocking jobs per call, on every one of the six
-    # CC consumers' critical paths.
+    # — so an empty violation set certifies the exact min-labeled closure
+    # directly, with no extra stability round.  Do not checkpoint the
+    # check's grouped table and reuse it as the label output: a
+    # checkpoint placed between the check and ``cur`` keeps the check's
+    # result job from materializing ``cur`` and multiplies the per-round
+    # stages.
     cur = (
         edges.where(F.col("a") != F.col("b"))
         .select(
@@ -205,16 +224,10 @@ def _connected_components(edges: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    _STAR_STATS_SQL = """
-SELECT count(*) AS n, count(DISTINCT a) AS na,
-       (SELECT count(*) FROM __cc_star x JOIN __cc_star y ON x.b = y.a)
-         AS chain
-FROM __cc_star"""
     converged = False
     for _ in range(MAX_CC_ROUNDS + 1):
         cur.createOrReplaceTempView("__cc_star")
-        stats = spark.sql(_STAR_STATS_SQL).first()
-        if stats.n == 0 or (stats.n == stats.na and stats.chain == 0):
+        if spark.sql(_STAR_VIOLATIONS_SQL).isEmpty():
             converged = True
             break
         # large-star's only consumer is small-star in the SAME round, so it

@@ -109,6 +109,15 @@ def _shingles(df: DataFrame) -> DataFrame:
 # -- exact dedup -------------------------------------------------------------
 
 
+def exact_fps(spark: SparkSession, view: str) -> DataFrame:
+    """(doc_id, fp) exact content fingerprints — md5 of the normalized token
+    stream — over the documents temp view ``view``."""
+    return spark.sql(
+        f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
+        f"FROM (SELECT doc_id, {SPARK_TOKENS} AS t FROM {view})"
+    )
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-groupBy exact dedup on the normalized token stream: one shuffle
     on md5, keeper = min doc_id per group.  Batch analytics: fingerprints
@@ -116,13 +125,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     on plain batch entries); dedup_incremental's exact arm keeps the
     shared exact_fps_table."""
     _docs(spark, sf_dir).createOrReplaceTempView("__xd_docs")
-    d = _mh_dialect("spark")
-    fps = spark.sql(
-        f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
-        f"FROM (SELECT doc_id, {d['tokens']} AS t FROM __xd_docs)"
-    )
     return (
-        fps.groupBy("fp")
+        exact_fps(spark, "__xd_docs")
+        .groupBy("fp")
         .agg(
             F.min("doc_id").alias("keeper_id"),
             F.count(F.lit(1)).alias("n_docs"),
@@ -505,17 +510,13 @@ def mh_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def exact_fps_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, fp) exact content fingerprints (md5 of the normalized
-    token stream) over ALL documents — checkpointed + memoized
-    (consumers: dedup_exact, dedup_incremental's exact arm)."""
+    """(doc_id, fp) exact content fingerprints (``exact_fps``) over ALL
+    documents — checkpointed + memoized (consumer: dedup_incremental's
+    exact arm; dedup_exact recomputes per invocation)."""
 
     def build() -> DataFrame:
         _docs(spark, sf_dir).createOrReplaceTempView("__xfp_docs")
-        d = _mh_dialect("spark")
-        return spark.sql(
-            f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
-            f"FROM (SELECT doc_id, {d['tokens']} AS t FROM __xfp_docs)"
-        )
+        return exact_fps(spark, "__xfp_docs")
 
     return _derived(spark, sf_dir, "exact-fps", build)
 
@@ -923,12 +924,7 @@ def build_mh_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % NEW_BATCH_MOD != 0
     ).createOrReplaceTempView("__mhidx_docs")
     sig = mh_signatures(spark, "__mhidx_docs")
-    d = _mh_dialect("spark")
-    fps = spark.sql(
-        f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
-        f"FROM (SELECT doc_id, {d['tokens']} AS t FROM __mhidx_docs)"
-    )
-    return sig.join(fps, "doc_id")
+    return sig.join(exact_fps(spark, "__mhidx_docs"), "doc_id")
 
 
 def pairs_from_sig_view(
@@ -1157,11 +1153,7 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") % NEW_BATCH_MOD == 0
         ).createOrReplaceTempView("__incx_new")
         if want_fp:
-            d = _mh_dialect("spark")
-            new = spark.sql(
-                f"SELECT doc_id, md5(concat_ws(' ', t)) AS fp "
-                f"FROM (SELECT doc_id, {d['tokens']} AS t FROM __incx_new)"
-            )
+            new = exact_fps(spark, "__incx_new")
         else:
             new = mh_signatures(spark, "__incx_new")
         return new.unionByName(idx_part)

@@ -274,7 +274,10 @@ def facets_and_total(df: DataFrame, cq: CompiledQuery) -> tuple[list[str], list[
 
     cats = topk("category", CATEGORIES_FACET_SIZE, 0, 1)
     fmts = topk("format", FORMATS_FACET_SIZE, 1, 0)
-    total_n = next(int(r["post_cnt"]) for r in rows if r["gc"] == 1 and r["gf"] == 1)
+    # grouping sets emit no grand-total () row over an empty input
+    total_n = next(
+        (int(r["post_cnt"]) for r in rows if r["gc"] == 1 and r["gf"] == 1), 0
+    )
     return cats, fmts, total_n
 
 

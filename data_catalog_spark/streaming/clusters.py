@@ -166,9 +166,12 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (the carried state) enter through the DataFrame API only.
         bs = batch_df.sparkSession
         batch_df.createOrReplaceTempView("__clst_batch_docs")
-        # lazy checkpoints: the probe's first job materializes bsig + sigs
-        # in-line; each eager=True here was a separate driver roundtrip,
-        # and driver gap — not task time — dominates this entry's wall.
+        # lazy checkpoints still run jobs under AQE: creating one runs every
+        # shuffle map stage of its plan at once (bsig: the REPARTITION
+        # exchange, one job; sigs: a union of checkpointed frames, none).
+        # What they defer is the result stage, which the probe's first job
+        # runs in-line; eager=True adds one more driver roundtrip each, and
+        # driver gap — not task time — dominates this entry's wall.
         bsig = mh_signatures(bs, "__clst_batch_docs").localCheckpoint(
             eager=False
         )

@@ -1,9 +1,10 @@
-"""Dump .explain('formatted') for named bench entries to plans/r12/.
+"""Dump .explain('formatted') for named bench entries to plans/r<N>/.
 
-Usage: python scripts/dump_r12_plans.py <before|after> name1 name2 ...
-       python scripts/dump_r12_plans.py <before|after> --slowest=35
-Evidence files for OPTIMIZATION_r12.md (the judge checks plan claims
-against these).  sf dir: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1.
+Usage: python scripts/dump_round_plans.py --round=N <before|after> name1 name2 ...
+       python scripts/dump_round_plans.py --round=N <before|after> --slowest=35
+Writes plans/r<N>/<name>_<before|after>.txt, the plan evidence that
+OPTIMIZATION_r<N>.md cites.  --slowest=K adds the K slowest entries of
+BENCH_RUNS.json.  sf dir: $SPARK_GRAFT_SF_DIR, else the sf0.1 test data.
 """
 
 from __future__ import annotations
@@ -18,25 +19,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    assert suffix in ("before", "after"), "first arg must be before|after"
-    names: list[str] = []
+    rnd = 0
     slowest = 0
-    for a in sys.argv[2:]:
-        if a.startswith("--slowest="):
+    args: list[str] = []
+    for a in sys.argv[1:]:
+        if a.startswith("--round="):
+            rnd = int(a.split("=", 1)[1])
+        elif a.startswith("--slowest="):
             slowest = int(a.split("=", 1)[1])
         else:
-            names.append(a)
+            args.append(a)
+    if rnd <= 0 or not args or args[0] not in ("before", "after"):
+        raise SystemExit(__doc__)
+    suffix, names = args[0], args[1:]
 
     import __spark_entry__ as e
     from data_catalog_spark.session import get_spark
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    outdir = os.path.join(here, "plans", "r12")
+    outdir = os.path.join(here, "plans", f"r{rnd}")
     os.makedirs(outdir, exist_ok=True)
 
-    spark = get_spark(app_name=f"plans-r12-{suffix}")
+    spark = get_spark(app_name=f"plans-r{rnd}-{suffix}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()
     if slowest:

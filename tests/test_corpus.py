@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from data_catalog_spark.operators import corpus, dedup
 
 from conftest import assert_same
@@ -103,28 +105,34 @@ def test_connected_components_empty_edges(spark):
     assert corpus._connected_components(edges).count() == 0
 
 
+def _union_find_labels(edges):
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # min-label closure: every node maps to its component's minimum
+    return {x: find(x) for x in parent}
+
+
+def _cc_labels(spark, edges):
+    df = spark.createDataFrame(edges, "a long, b long")
+    return {r.node: r.label for r in corpus._connected_components(df).collect()}
+
+
 def test_connected_components_random_graphs_match_union_find(spark):
     """Differential check of large-star/small-star against a pure-python
     union-find on seeded random graphs spanning the shapes that stress
     the algorithm: sparse (forest-ish), dense (few components), ring
     (max cycle), complete (max degree), and a binary tree."""
     import random
-
-    def union_find_labels(edges):
-        parent = {}
-
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # min-label closure: every node maps to its component's minimum
-        return {x: find(x) for x in parent}
 
     rng = random.Random(20260816)
     cases = []
@@ -141,12 +149,79 @@ def test_connected_components_random_graphs_match_union_find(spark):
     cases.append([(i, (i - 1) // 2) for i in range(1, 127)])  # binary tree
     for edges in cases:
         edges = [(a, b) for a, b in edges if a != b]
-        want = union_find_labels(edges)
-        df = spark.createDataFrame(edges, "a long, b long")
-        got = {
-            r.node: r.label for r in corpus._connected_components(df).collect()
-        }
-        assert got == want
+        assert _cc_labels(spark, edges) == _union_find_labels(edges)
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(3, 1), (3, 2)],  # node 3 has two parents
+        [(3, 2), (2, 1)],  # depth-2 chain: 2 is both a source and a root
+    ],
+    ids=["two_parents", "depth2_chain"],
+)
+def test_star_check_rejects_non_star_forests(spark, edges):
+    """The convergence check must reject every edge set that is not a
+    height-1 star forest: declaring these converged would hand back the
+    edges as labels (3 -> 2 for the chain, two labels for node 3)."""
+    spark.createDataFrame(edges, "a long, b long").createOrReplaceTempView(
+        "__cc_star"
+    )
+    assert not spark.sql(corpus._STAR_VIOLATIONS_SQL).isEmpty()
+    assert _cc_labels(spark, edges) == _union_find_labels(edges)
+
+
+def test_star_check_accepts_star_forest(spark):
+    spark.createDataFrame(
+        [(2, 1), (3, 1), (5, 4)], "a long, b long"
+    ).createOrReplaceTempView("__cc_star")
+    assert spark.sql(corpus._STAR_VIOLATIONS_SQL).isEmpty()
+
+
+def _spark_work(spark, fn):
+    """(fn(), jobs, stages) of the Spark jobs started while ``fn`` runs: a
+    status-tracker job-id window (ids are dense; the tracker is fed by an
+    asynchronous listener bus, hence the settle sleeps)."""
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job_id(after):
+        last, probe, misses = after, after + 1, 0
+        while misses < 20:
+            if tracker.getJobInfo(probe) is None:
+                misses += 1
+            else:
+                last, misses = probe, 0
+            probe += 1
+        return last
+
+    time.sleep(0.5)
+    first = last_job_id(max(tracker.getJobIdsForGroup(None), default=-1))
+    out = fn()
+    time.sleep(0.5)
+    ids = range(first + 1, last_job_id(first) + 1)
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in ids)
+    return out, len(ids), stages
+
+
+# Jobs and stages of one _connected_components(...).collect(), measured at
+# local[1] and local[4]: the convergence check must stay at 2 jobs per
+# round (the grouped statement's map stage and its isEmpty result job).
+@pytest.mark.parametrize(
+    "edges, max_jobs, max_stages",
+    [
+        ([(2, 1), (3, 1), (5, 4)], 5, 9),
+        ([(100, 2), (100, 4), (2, 1), (4, 3)], 17, 51),
+        ([(i, i + 1) for i in range(63)], 41, 135),
+    ],
+    ids=["star_forest", "bridged_stars", "chain64"],
+)
+def test_connected_components_job_pins(spark, edges, max_jobs, max_stages):
+    got, jobs, stages = _spark_work(spark, lambda: _cc_labels(spark, edges))
+    assert got == _union_find_labels(edges)
+    assert jobs <= max_jobs
+    assert stages <= max_stages
 
 
 def test_split_assign_parity(spark, sf_dir, ddb):

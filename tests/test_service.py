@@ -94,6 +94,16 @@ def test_search_and_count_endpoints(svc):
     assert svc.count(["org99"], M.ONLY_PRIVATE, False)[0] == {"total": 0}
 
 
+def test_zero_hit_search_is_200_with_empty_result(svc):
+    """A query whose filtered set is empty answers 200, not 500: Spark emits
+    no grand-total grouping-sets row over empty input, so the total must
+    default to 0."""
+    svc.put_entry("e1", ENTRY, ORG, False)
+    body, status = svc.search({"query": "zzznomatchzzz"}, ORG, M.PRIVATE_AND_PUBLIC, False)
+    assert status == 200
+    assert body == {"hits": [], "total": 0, "categories": [], "formats": []}
+
+
 def test_admin_endpoints(svc):
     rows = [
         {"id": "a", **ENTRY},
