@@ -59,6 +59,7 @@ from .schema import (
 )
 
 _UNSET = object()  # sentinel: _commit resolves the base version itself
+_UPSERT_ATTEMPTS = 3  # commits one upsert tries before a lost race surfaces
 
 
 class DatasetsCatalog:
@@ -459,9 +460,20 @@ class DatasetsCatalog:
 
         Returns True when created, False when updated (the reference's
         201-vs-200 distinction, metadata_entry.py:169-181).
+
+        A whole-document replace by id does not depend on what the losing
+        snapshot held, so a lost commit race recomputes against the new
+        snapshot and retries (``created`` included) — the reference's
+        last-writer-wins index semantics.  After ``_UPSERT_ATTEMPTS`` lost
+        races the CommitConflictError surfaces.
         """
-        created, _ = self.bulk_upsert([(entry_id, entry)])
-        return entry_id in created
+        for attempt in range(_UPSERT_ATTEMPTS):
+            try:
+                created, _ = self.bulk_upsert([(entry_id, entry)])
+                return entry_id in created
+            except CommitConflictError:
+                if attempt == _UPSERT_ATTEMPTS - 1:
+                    raise
 
     def bulk_upsert(
         self, entries: list[tuple[str, dict]], *, skip_invalid: bool = False

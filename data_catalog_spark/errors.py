@@ -37,4 +37,7 @@ class CommitConflictError(DataCatalogError):
     """Raised when a catalog commit loses an optimistic-concurrency race:
     the table advanced past the version the post-image was computed
     against.  The loser must retry on the new snapshot — never silently
-    clobber the winner's manifest chain (HTTP 409 shape)."""
+    clobber the winner's manifest chain.  Surfaces as HTTP 409 with its
+    message when the caller does not (or can no longer) retry."""
+
+    code = 409

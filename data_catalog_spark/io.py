@@ -132,7 +132,8 @@ def ensure_materialized(path: str, build_fn) -> str:
 
 def process_scratch_table(df, tag: str):
     """Materialize a derived DataFrame as a written parquet table in a
-    PROCESS-SCOPED scratch dir and return the read-back frame.
+    PROCESS-SCOPED scratch dir and return (the read-back frame, its
+    directory).
 
     This is the §5-correct home for large derived corpus state with
     multiple in-process consumers (signature tables, scored pair tables,
@@ -146,8 +147,10 @@ def process_scratch_table(df, tag: str):
     persist.py): the dir embeds this process's pid and is removed at
     interpreter exit, so no bench/oracle invocation can ever read state a
     previous run computed — derived-state sharing stays within one
-    process, the adjudicated memo discipline.  Callers key the returned
-    handle per (session, content) in their SessionLRU as before."""
+    process, the adjudicated memo discipline.  The one caller is
+    ``operators.memo`` (storage kind ``SCRATCH``), which keys the frame
+    per (session, content) and removes the directory when it releases
+    the entry."""
     import atexit
     import os
     import shutil
@@ -160,7 +163,7 @@ def process_scratch_table(df, tag: str):
         atexit.register(shutil.rmtree, _PROC_SCRATCH, ignore_errors=True)
     path = os.path.join(_PROC_SCRATCH, f"{tag}-{uuid.uuid4().hex[:12]}")
     df.write.parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.parquet(path), path
 
 
 _PROC_SCRATCH = None

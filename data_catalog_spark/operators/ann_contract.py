@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from .registry import register
 from . import similarity
 from . import quantization
-from .session_cache import SessionLRU
+from .memo import CHECKPOINT, memo
 
 # (floor value, which statistic it binds on) per lane — see module docstring
 LANE_FLOORS: dict[str, tuple[float, str]] = {
@@ -63,35 +63,19 @@ _LANE_FNS = {
 }
 
 # per-(session, corpus) memo of the checkpointed (qid, nid) top-k frames —
-# the dedup_contract._PAIR_CACHE pattern: the contract reads RESULT
-# tables; within one session (a bench process, repeated gate reads) each
-# lane's top-k materializes once and every later read serves the rows.
-_TOPK_CACHE = SessionLRU()
-
-
+# the dedup_contract._pairs pattern: the contract reads RESULT tables;
+# within one session (a bench process, repeated gate reads) each lane's
+# top-k materializes once and every later read serves the rows.
 def _lane_topk(spark: SparkSession, sf_dir: str, lane: str) -> DataFrame:
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-        lane,
+    fn = similarity.ann_bruteforce_topk if lane == "brute" else _LANE_FNS[lane]
+    return memo(
+        spark,
+        f"topk-{lane}",
+        sf_dir,
+        "embeddings",
+        lambda: fn(spark, sf_dir).select("qid", "nid"),
+        CHECKPOINT,
     )
-    hit = _TOPK_CACHE.get(id(spark), key)
-    if hit is None:
-        fn = (
-            similarity.ann_bruteforce_topk
-            if lane == "brute"
-            else _LANE_FNS[lane]
-        )
-        hit = fn(spark, sf_dir).select("qid", "nid").localCheckpoint(
-            eager=False
-        )
-        _TOPK_CACHE.put(id(spark), key, hit)
-    return hit
 
 
 def ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,7 +27,7 @@ from .dedup import (
     JACCARD_PAIRS_BODY,
     minhash_pairs_ctes,
 )
-from .session_cache import SessionLRU
+from .memo import CHECKPOINT, memo
 from .registry import register
 from .text import (
     BPE_PATTERN,
@@ -252,15 +252,12 @@ def _connected_components(edges: DataFrame) -> DataFrame:
     )
 
 
-# Resolved cluster labels memoized per (session, Spark application,
-# documents content stat, pair method) — derived dedup state, the same
+# Resolved cluster labels memoized per (session, documents content, pair
+# method) through operators.memo — derived dedup state, the same
 # content-keyed contract as the trained quantizers / LSH code table /
 # seeded catalog: the pair scan + label propagation run once per corpus;
 # every consumer (the registered queries, dedup_keep_best's apply stage,
-# re-runs in one bench process) reads the materialized labels.  Session-
-# LRU, not a plain dict: each cached frame pins its session (r10
-# session_cache rationale).
-_CLUSTER_CACHE = SessionLRU()
+# re-runs in one bench process) reads the materialized labels.
 
 # pair generators feeding the transitive closure, by method name — routed
 # through dedup_contract's session-memoized pair tables so one bench
@@ -283,31 +280,19 @@ _PAIR_LANES = {
 def _cluster_labels(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
     """Memoized (doc_id, cluster_id) closure over the ``method`` pair
     graph; cluster_id = min doc_id reachable."""
-    import os
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-        method,
-    )
-    hit = _CLUSTER_CACHE.get(id(spark), key)
-    if hit is None:
+    def build() -> DataFrame:
         edges = _PAIR_LANES[method](spark, sf_dir).select(
             F.col("da").alias("a"), F.col("db").alias("b")
         )
-        hit = (
-            _connected_components(edges)
-            .select(
-                F.col("node").alias("doc_id"),
-                F.col("label").alias("cluster_id"),
-            )
-            .localCheckpoint(eager=False)
+        return _connected_components(edges).select(
+            F.col("node").alias("doc_id"),
+            F.col("label").alias("cluster_id"),
         )
-        _CLUSTER_CACHE.put(id(spark), key, hit)
-    return hit
+
+    return memo(
+        spark, f"clusters-{method}", sf_dir, "documents", build, CHECKPOINT
+    )
 
 
 def dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,6 +416,47 @@ def dedup_clusters_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
 register("dedup_clusters_reload", dedup_clusters_reload, MH_COMPONENTS_ORACLE)
 
 
+def load_old_state(
+    spark: SparkSession, sf_dir: str, view: str
+) -> tuple[SparkSession, DataFrame, DataFrame]:
+    """(sibling session, old-corpus signatures, old-corpus cluster labels)
+    as of the last index build: the persisted MinHash signature index
+    projected to its signature columns, and the persisted
+    ``mh_cluster_labels_old`` artifact — shared on disk by the batch
+    incremental merge and the streaming cluster lane.  Both frames are
+    owned by a fresh sibling session; a labels build registers the old
+    signatures under ``view`` in that session."""
+    from . import persist
+    from .dedup import (
+        MINHASH_K,
+        build_mh_sig_index,
+        mh_sig_index_identity,
+        pairs_from_sig_view,
+    )
+
+    docs_path, key = mh_sig_index_identity(sf_dir)
+    sib = spark.newSession()
+    idx = persist.build_or_load(
+        sib, "mh_sig_index", key, lambda: build_mh_sig_index(spark, sf_dir)
+    )
+    sigs = idx.select("doc_id", *[f"h{i}" for i in range(MINHASH_K)])
+
+    def build_old_labels() -> DataFrame:
+        sigs.localCheckpoint(eager=True).createOrReplaceTempView(view)
+        pairs = pairs_from_sig_view(sib, view)
+        return _connected_components(
+            pairs.select(F.col("da").alias("a"), F.col("db").alias("b"))
+        ).select(
+            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+        )
+
+    old_key = persist.content_key([docs_path], f"mh-cluster-labels-old|{key}")
+    labels_old = persist.build_or_load(
+        sib, "mh_cluster_labels_old", old_key, build_old_labels
+    )
+    return sib, sigs, labels_old
+
+
 def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dup-CLUSTER maintenance — the third index-maintenance
     lane (ann_pq_index_append = vector index append, dedup_incremental_indexed
@@ -458,89 +484,48 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     that can shift old-old pairs); pinned at test SF by
     tests/test_corpus.py.
 
-    The merged labels memoize per (session, corpus content) — the
-    _CLUSTER_CACHE contract every cluster consumer already follows: the
-    probe + star-merge run once per corpus version and batch, repeat
-    reads in one session serve the materialized frame."""
-    import os as _os
+    The merged labels memoize per (session, corpus content) through
+    operators.memo, like every cluster consumer: the probe + star-merge
+    run once per corpus version and batch, repeat reads in one session
+    serve the materialized frame."""
+    from .dedup import NEW_BATCH_MOD, mh_signatures, pairs_from_sig_view
 
-    st = _os.stat(_os.path.join(sf_dir, "documents.parquet"))
-    memo_key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-        "incremental-merge",
-    )
-    hit = _CLUSTER_CACHE.get(id(spark), memo_key)
-    if hit is not None:
-        return hit.orderBy("doc_id")
-    from . import persist
-    from .dedup import (
-        MINHASH_K,
-        NEW_BATCH_MOD,
-        build_mh_sig_index,
-        mh_sig_index_identity,
-        mh_signatures,
-        pairs_from_sig_view,
-    )
-
-    docs_path, key = mh_sig_index_identity(sf_dir)
-    sib = spark.newSession()
-    idx = persist.build_or_load(
-        sib, "mh_sig_index", key, lambda: build_mh_sig_index(spark, sf_dir)
-    )
-    sigcols = ["doc_id"] + [f"h{i}" for i in range(MINHASH_K)]
-
-    def build_old_labels() -> DataFrame:
-        idx.select(*sigcols).localCheckpoint(
+    def build() -> DataFrame:
+        sib, old_sigs, labels_old = load_old_state(
+            spark, sf_dir, "__ccinc_old_sig"
+        )
+        # per-batch work starts here: new-slice signatures only
+        read_table(sib, sf_dir, "documents").where(
+            F.col("doc_id") % NEW_BATCH_MOD == 0
+        ).createOrReplaceTempView("__ccinc_new")
+        new_sig = mh_signatures(sib, "__ccinc_new")
+        new_sig.unionByName(old_sigs).localCheckpoint(
             eager=True
-        ).createOrReplaceTempView("__ccinc_old_sig")
-        pairs = pairs_from_sig_view(sib, "__ccinc_old_sig")
-        return _connected_components(
-            pairs.select(F.col("da").alias("a"), F.col("db").alias("b"))
-        ).select(
+        ).createOrReplaceTempView("__ccinc_sig")
+        new_pairs = pairs_from_sig_view(
+            sib,
+            "__ccinc_sig",
+            pred=f"da % {NEW_BATCH_MOD} = 0 OR db % {NEW_BATCH_MOD} = 0",
+        )
+        star = labels_old.where(F.col("doc_id") != F.col("cluster_id")).select(
+            F.col("doc_id").alias("a"), F.col("cluster_id").alias("b")
+        )
+        edges = new_pairs.select(
+            F.col("da").alias("a"), F.col("db").alias("b")
+        ).unionByName(star)
+        labels = _connected_components(edges).select(
             F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
         )
+        sizes = labels.groupBy("cluster_id").agg(
+            F.count(F.lit(1)).cast("long").alias("cluster_size")
+        )
+        return labels.join(sizes, "cluster_id").select(
+            "doc_id", "cluster_id", "cluster_size"
+        )
 
-    old_key = persist.content_key(
-        [docs_path], f"mh-cluster-labels-old|{key}"
-    )
-    labels_old = persist.build_or_load(
-        sib, "mh_cluster_labels_old", old_key, build_old_labels
-    )
-    # per-batch work starts here: new-slice signatures only
-    read_table(sib, sf_dir, "documents").where(
-        F.col("doc_id") % NEW_BATCH_MOD == 0
-    ).createOrReplaceTempView("__ccinc_new")
-    new_sig = mh_signatures(sib, "__ccinc_new")
-    new_sig.unionByName(idx.select(*sigcols)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("__ccinc_sig")
-    new_pairs = pairs_from_sig_view(
-        sib,
-        "__ccinc_sig",
-        pred=f"da % {NEW_BATCH_MOD} = 0 OR db % {NEW_BATCH_MOD} = 0",
-    )
-    star = labels_old.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias("a"), F.col("cluster_id").alias("b")
-    )
-    edges = new_pairs.select(
-        F.col("da").alias("a"), F.col("db").alias("b")
-    ).unionByName(star)
-    labels = _connected_components(edges).select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    merged = (
-        labels.join(sizes, "cluster_id")
-        .select("doc_id", "cluster_id", "cluster_size")
-        .localCheckpoint(eager=False)
-    )
-    _CLUSTER_CACHE.put(id(spark), memo_key, merged)
-    return merged.orderBy("doc_id")
+    return memo(
+        spark, "incremental-merge", sf_dir, "documents", build, CHECKPOINT
+    ).orderBy("doc_id")
 
 
 def _incremental_clusters_oracle() -> str:

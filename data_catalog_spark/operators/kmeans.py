@@ -39,13 +39,12 @@ is part of the LLM-pipeline surface (IVF coarse-quantizer training).
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .memo import AS_BUILT, memo
 from .registry import register
-from .session_cache import SessionLRU
 from .similarity import _emb
 
 K_TRAIN = 8
@@ -54,19 +53,15 @@ _DIM = 64
 _Q = 1_000_000.0  # microunit fixed-point quantum
 
 # Trained model state (coarse centroids, PQ codebooks) memoized per
-# (Spark application, corpus content stat) — the driver-side twin of
-# io.materialization_path.  kmeans_train, ann_ivf_trained_topk and
-# ann_pq_trained_topk all consume the embeddings corpus: within one
-# process each model trains ONCE and every consumer (and every bench
-# re-run) reuses it; a regenerated embeddings.parquet (new mtime/size)
-# retrains.  Models are plain python floats, so a cache hit never
-# resurrects executor state from a stopped session and the dict can stay
-# unbounded.  The shared embeddings CHECKPOINT is different — its
-# DataFrame pins its session — so it lives in a session-LRU store
-# (session_cache.SessionLRU) that releases discarded newSession()
-# siblings instead of leaking them (r9 ADVICE).
-_MODEL_CACHE: dict[tuple, object] = {}
-_EMB_CACHE = SessionLRU()
+# (Spark application, corpus content stat) through operators.memo, owned
+# by the SparkContext — the driver-side twin of io.materialization_path.
+# kmeans_train, ann_ivf_trained_topk and ann_pq_trained_topk all consume
+# the embeddings corpus: within one process each model trains ONCE and
+# every consumer (every session of the app, every bench re-run) reuses
+# it; a regenerated embeddings.parquet (new mtime/size) retrains.  Models
+# are plain python floats, so a hit never resurrects executor state from
+# a stopped session.  The shared embeddings CHECKPOINT is different — its
+# DataFrame pins its session — so it is owned by the session.
 _VIEW_SEQ = itertools.count()
 
 
@@ -79,47 +74,38 @@ def _uview(df: DataFrame, prefix: str) -> str:
     return name
 
 
-def _corpus_key(spark: SparkSession, sf_dir: str, kind: str) -> tuple:
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_mtime_ns,
-        st.st_size,
-        kind,
-    )
-
-
 def _shared_emb(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     """The (vec_id, v) embeddings frame behind one lazy localCheckpoint,
     plus its registered view name — shared by the training surfaces.
 
-    Keyed on the SESSION too, not just the application: temp views live
-    in a session's catalog, so a sibling ``spark.newSession()`` of the
-    same app must build (and register) its own entry or every consumer
-    of the cached view name hits TABLE_OR_VIEW_NOT_FOUND.  ``id(spark)``
-    cannot alias a dead session here because the cached DataFrame keeps
-    a strong reference to its session for the life of the entry.  The
-    trained-model caches (plain python floats) stay app-keyed — floats
-    are session-free, and on a miss they train through this
+    Owned by the SESSION, not the application: temp views live in a
+    session's catalog, so a sibling ``spark.newSession()`` of the same
+    app must build (and register) its own entry or every consumer of the
+    cached view name hits TABLE_OR_VIEW_NOT_FOUND.  The owner id cannot
+    alias a dead session here because the cached DataFrame keeps a
+    strong reference to its session for the life of the entry.  The
+    trained models (plain python floats) are owned by the SparkContext —
+    floats are session-free, and on a miss they train through this
     session-scoped view."""
-    key = _corpus_key(spark, sf_dir, "emb")
-    hit = _EMB_CACHE.get(id(spark), key)
-    if hit is None:
+
+    def build() -> tuple[DataFrame, str]:
         e = _emb(spark, sf_dir).localCheckpoint(eager=False)
-        hit = (e, _uview(e, "__km_e"))
-        _EMB_CACHE.put(id(spark), key, hit)
-    return hit
+        return (e, _uview(e, "__km_e"))
+
+    return memo(spark, "emb", sf_dir, "embeddings", build, AS_BUILT)
 
 
 def _trained_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The coarse k=8 Lloyd model over the embeddings corpus, trained once
     per corpus content and shared by kmeans_train + ann_ivf_trained_topk."""
-    key = _corpus_key(spark, sf_dir, "coarse")
-    if key not in _MODEL_CACHE:
+
+    def build() -> list[list[float]]:
         _, view = _shared_emb(spark, sf_dir)
-        _MODEL_CACHE[key] = _lloyd_centroids(spark, view)
-    return _MODEL_CACHE[key]  # type: ignore[return-value]
+        return _lloyd_centroids(spark, view)
+
+    return memo(
+        spark.sparkContext, "coarse", sf_dir, "embeddings", build, AS_BUILT
+    )
 
 
 def _micro_sum(col: str) -> F.Column:
@@ -428,8 +414,7 @@ def _trained_codebooks(
     memoization contract as ``_trained_centroids``)."""
     from .similarity import N_QUERIES, PQ_M, _with_norm
 
-    key = _corpus_key(spark, sf_dir, "pq_books")
-    if key not in _MODEL_CACHE:
+    def build() -> list[list[list[float]]]:
         sub = _DIM // PQ_M
         e0, _ = _shared_emb(spark, sf_dir)
         corpus = (
@@ -450,8 +435,11 @@ SELECT vec_id, s.m AS m, s.sv AS sv FROM (
 """
         ).localCheckpoint(eager=False)
         sl_view = _uview(sl, "__pq_sl")
-        _MODEL_CACHE[key] = _pq_codebooks_micro(spark, corpus_view, sl_view)
-    return _MODEL_CACHE[key]  # type: ignore[return-value]
+        return _pq_codebooks_micro(spark, corpus_view, sl_view)
+
+    return memo(
+        spark.sparkContext, "pq_books", sf_dir, "embeddings", build, AS_BUILT
+    )
 
 
 def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -245,6 +245,20 @@ def test_invalid_json_body_is_400(server):
     conn.close()
 
 
+def test_commit_conflict_is_409_with_message(server, monkeypatch):
+    """A write that keeps losing the commit race answers 409 with the
+    conflict's message, not a bare 500."""
+    from data_catalog_spark.errors import CommitConflictError
+
+    def always_conflict(self, *a, **k):
+        raise CommitConflictError("table advanced from v1 to v2")
+
+    monkeypatch.setattr(DatasetsCatalog, "bulk_upsert", always_conflict)
+    status, err = _req(server, "PUT", "/rest/datasets/c1", token=USER, body=ENTRY)
+    assert status == 409 and err["status"] == 409
+    assert err["message"].startswith("table advanced")
+
+
 def test_router_never_throws_fuzz(server):
     """Robustness: arbitrary method/path/query/body combinations always
     produce a well-formed JSON response with a known status — the handler

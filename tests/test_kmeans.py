@@ -119,12 +119,13 @@ def test_trained_pq_parity_and_recall(spark, sf_dir, ddb):
 
 
 def test_trained_surfaces_work_from_a_sibling_session(spark, sf_dir):
-    """A spark.newSession() sibling shares the app-keyed float models but
+    """A spark.newSession() sibling shares the app-owned float models but
     must NOT inherit the session-scoped embeddings view: before the
-    session-aware cache key, a warm _MODEL_CACHE made the sibling resolve
-    a temp view registered only in the first session's catalog
+    session-aware memo owner, a warm app-wide model memo made the sibling
+    resolve a temp view registered only in the first session's catalog
     (TABLE_OR_VIEW_NOT_FOUND)."""
     from data_catalog_spark.operators import kmeans as km
+    from data_catalog_spark.operators import memo
 
     km.kmeans_train(spark, sf_dir).collect()  # warm the caches
     sibling = spark.newSession()
@@ -134,23 +135,42 @@ def test_trained_surfaces_work_from_a_sibling_session(spark, sf_dir):
         rows = km.ann_pq_trained_topk(sibling, sf_dir).limit(5).collect()
         assert len(rows) > 0
     finally:
-        # drop the sibling's cache entries so later tests in this process
+        # drop the sibling's memo entries so later tests in this process
         # never resolve a plan against the discarded session
-        km._EMB_CACHE.drop_session(id(sibling))
+        memo.drop_session(sibling)
+
+
+def test_sibling_session_reuses_app_trained_centroids(spark, sf_dir, monkeypatch):
+    """The trained centroids are owned by the SparkContext, so a
+    newSession() sibling reads them from the memo instead of retraining."""
+    from data_catalog_spark.operators import kmeans as km
+    from data_catalog_spark.operators import memo
+
+    km.kmeans_train(spark, sf_dir).collect()  # trains (or reuses) once per app
+    sibling = spark.newSession()
+
+    def boom(*a, **k):  # pragma: no cover - must never run
+        raise AssertionError("sibling session retrained the centroids")
+
+    monkeypatch.setattr(km, "_lloyd_centroids", boom)
+    try:
+        assert len(km.kmeans_train(sibling, sf_dir).collect()) > 0
+    finally:
+        memo.drop_session(sibling)
 
 
 def test_session_cache_is_bounded():
-    """The session-scoped stores evict whole sessions LRU-wise — an app
+    """The memo store evicts whole owners LRU-wise — an app
     churning newSession() siblings must not pin every one of them via
     cached plans (r9 ADVICE)."""
-    from data_catalog_spark.operators.session_cache import SessionLRU
+    from data_catalog_spark.operators.memo import MemoStore
 
-    lru = SessionLRU(max_sessions=2)
+    lru = MemoStore(max_owners=2)
     lru.put(1, "k", "a")
     lru.put(2, "k", "b")
     assert lru.get(1, "k") == "a"  # touch: 1 becomes MRU
     lru.put(3, "k", "c")  # evicts session 2, the LRU
-    assert lru.sessions() == [1, 3]
+    assert lru.owners() == [1, 3]
     assert lru.get(2, "k") is None
     assert lru.get(1, "k") == "a" and lru.get(3, "k") == "c"
     lru.drop_session(1)
@@ -171,9 +191,9 @@ def test_session_cache_eviction_unpersists():
     """r10 ADVICE: eviction must not rely on the GC → py4j → ContextCleaner
     chain alone — evicted DataFrames (also inside tuples/dicts) get a
     best-effort immediate unpersist."""
-    from data_catalog_spark.operators.session_cache import SessionLRU
+    from data_catalog_spark.operators.memo import MemoStore
 
-    lru = SessionLRU(max_sessions=1)
+    lru = MemoStore(max_owners=1)
     a, b, c = _FakeCached(), _FakeCached(), _FakeCached()
     lru.put(1, "k", a)
     lru.put(1, "k2", (b, "label"))  # tuple bundles release their frames
@@ -194,9 +214,9 @@ def test_session_cache_is_thread_safe():
     ADVICE)."""
     import threading
 
-    from data_catalog_spark.operators.session_cache import SessionLRU
+    from data_catalog_spark.operators.memo import MemoStore
 
-    lru = SessionLRU(max_sessions=3)
+    lru = MemoStore(max_owners=3)
     errors = []
 
     def worker(tid: int) -> None:
@@ -205,7 +225,7 @@ def test_session_cache_is_thread_safe():
                 lru.put(tid % 5, i % 7, i)
                 lru.get((tid + 1) % 5, i % 7)
                 if i % 50 == 0:
-                    lru.sessions()
+                    lru.owners()
         except Exception as exc:  # pragma: no cover
             errors.append(exc)
 
@@ -215,4 +235,4 @@ def test_session_cache_is_thread_safe():
     for t in threads:
         t.join()
     assert not errors
-    assert len(lru.sessions()) <= 3
+    assert len(lru.owners()) <= 3

@@ -139,3 +139,44 @@ def test_bulk_load_skips_non_dict_rows(svc):
 def test_non_string_query_maps_to_400(svc):
     assert svc.search(5, ORG)[1] == 400
     assert svc.search(["x"], ORG)[1] == 400
+
+
+def test_racing_puts_of_fresh_ids_both_created(svc, monkeypatch):
+    """Two PUTs of distinct fresh ids computed against the same snapshot:
+    the loser's commit finds the table advanced.  A whole-document replace
+    retries on the new snapshot, so both answer 201 and both read back
+    (before the retry the loser escaped put_entry as CommitConflictError,
+    which the HTTP layer answered 500)."""
+    import threading
+
+    svc.catalog.create_if_not_exists()
+    both_computed = threading.Barrier(2, timeout=120)
+    waited: set[int] = set()
+    commit = DatasetsCatalog._commit
+
+    def racing_commit(self, *a, **k):
+        # hold each thread's FIRST commit until both post-images exist
+        me = threading.get_ident()
+        if me not in waited:
+            waited.add(me)
+            both_computed.wait()
+        return commit(self, *a, **k)
+
+    monkeypatch.setattr(DatasetsCatalog, "_commit", racing_commit)
+    results: dict[str, object] = {}
+
+    def put(eid: str) -> None:
+        try:
+            results[eid] = svc.put_entry(eid, {**ENTRY, "title": eid}, ORG, False)
+        except Exception as ex:  # the assertion below reports it
+            results[eid] = ex
+
+    threads = [threading.Thread(target=put, args=(e,)) for e in ("ra", "rb")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert results == {"ra": (None, 201), "rb": (None, 201)}
+    for eid in ("ra", "rb"):
+        entry, status = svc.get_entry(eid, ORG, False)
+        assert status == 200 and entry["title"] == eid
