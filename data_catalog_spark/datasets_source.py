@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .io import read_table
+
 # Column recipe (mirrors the generator semantics of the reference dev corpus):
 #   id          — part key (string, the ES _id)
 #   title       — p_name ("cold widget"), english-analyzed full-text target
@@ -64,5 +66,5 @@ ORACLE_DATASETS_CTE = f"WITH datasets AS ({DATASETS_FROM_PART_SQL})"
 
 def datasets_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the `datasets` DataFrame from ``{sf_dir}/part.parquet``."""
-    spark.read.parquet(f"{sf_dir}/part.parquet").createOrReplaceTempView("part")
+    read_table(spark, sf_dir, "part").createOrReplaceTempView("part")
     return spark.sql(DATASETS_FROM_PART_SQL)

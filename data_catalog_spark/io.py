@@ -1,10 +1,22 @@
 """Table readers for the driver's parquet tables.
 
-The events table stores ``ts`` as parquet TIMESTAMP(NANOS), which Spark's
-vectorized reader rejects.  With ``spark.sql.legacy.parquet.nanosAsLong``
-the column arrives as LongType nanoseconds; we convert with integer division
-(``div`` — a double division would lose precision at 1e18) to microsecond
-timestamps, matching what DuckDB produces when it truncates ns → µs.
+Every input table is read with a declared schema (``TABLE_SCHEMAS``):
+``spark.read.parquet`` without one plans a one-task Spark job to read a
+footer, for a schema the engine already knows.
+
+The ``events`` table stores ``ts`` as a tz-naive parquet timestamp whose
+unit has varied between data drops: TIMESTAMP(NANOS) in an early drop,
+TIMESTAMP(MICROS, isAdjustedToUTC=false) in the current sf0.001, sf0.01
+and sf0.1.  ``table_schema`` probes the unit from the file's footer with
+pyarrow (``streaming.events._ts_unit``, no Spark job) and reads both:
+
+- NANOS arrives as LongType nanoseconds (the vectorized reader rejects the
+  unit; ``spark.sql.legacy.parquet.nanosAsLong`` surfaces the raw int64),
+  converted with integer division (``div`` — a double division would lose
+  precision at 1e18) to microsecond timestamps, matching what DuckDB
+  produces when it truncates ns → µs;
+- MICROS arrives as TIMESTAMP_NTZ and is cast to the session-tz (UTC)
+  TIMESTAMP, like every other tz-naive timestamp column.
 """
 
 from __future__ import annotations
@@ -26,9 +38,56 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
+# The input tables' schemas (TESTDATA.md), exactly as Spark infers them
+# from the footers (tests/test_io_schemas.py pins the equality at every
+# scale factor).  ``events`` is absent: its ``ts`` unit varies, so
+# ``table_schema`` takes it from ``streaming.events.events_stream_schema``.
+TABLE_SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": (
+        "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+    ),
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+
+def table_schema(sf_dir: str, name: str):
+    """The read schema of input table ``name`` under ``sf_dir``: its DDL
+    from ``TABLE_SCHEMAS``, or for ``events`` the schema of the ``ts`` unit
+    its footer declares (a pyarrow metadata read, no Spark job)."""
+    if name == "events":
+        from .streaming.events import _ts_unit, events_stream_schema
+
+        return events_stream_schema(_ts_unit(f"{sf_dir}/events.parquet"))
+    return TABLE_SCHEMAS[name]
+
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.schema(table_schema(sf_dir, name)).parquet(
+        f"{sf_dir}/{name}.parquet"
+    )
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         _require_utc(spark)
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -163,7 +222,7 @@ def process_scratch_table(df, tag: str):
         atexit.register(shutil.rmtree, _PROC_SCRATCH, ignore_errors=True)
     path = os.path.join(_PROC_SCRATCH, f"{tag}-{uuid.uuid4().hex[:12]}")
     df.write.parquet(path)
-    return df.sparkSession.read.parquet(path), path
+    return df.sparkSession.read.schema(df.schema).parquet(path), path
 
 
 _PROC_SCRATCH = None

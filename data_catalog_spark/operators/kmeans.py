@@ -180,16 +180,19 @@ SELECT CAST(array_position(dists, array_min(dists)) - 1 AS INT) AS cluster,
 FROM a GROUP BY 1
 """
     )
-    cent_rows = [
-        (c, p, cents[c][p]) for c in range(K_TRAIN) for p in range(_DIM)
+    # the model is 8 × 64 rows already in Python: attach the
+    # collected 8-row stats in Python (dropping clusters with no members,
+    # as an inner join would) instead of a join and a sort as Spark jobs
+    by_cluster = {r.cluster: (r.n_points, r.inertia) for r in stats.collect()}
+    rows = [
+        (c, p, cents[c][p], *by_cluster[c])
+        for c in range(K_TRAIN)
+        if c in by_cluster
+        for p in range(_DIM)
     ]
-    cent_df = spark.createDataFrame(
-        cent_rows, "cluster int, pos int, centroid double"
-    )
-    return (
-        cent_df.join(F.broadcast(stats), "cluster")
-        .select("cluster", "pos", "centroid", "n_points", "inertia")
-        .orderBy("cluster", "pos")
+    return spark.createDataFrame(
+        rows,
+        "cluster int, pos int, centroid double, n_points bigint, inertia double",
     )
 
 

@@ -172,14 +172,15 @@ register("ann_filtered_topk", ann_filtered_topk, ANN_FILTERED_ORACLE)
 EXACT_PAIRS_MAX_ROWS = 100_000
 
 
-def _parquet_row_count(spark: SparkSession, path: str) -> int:
-    """Row count from parquet FOOTER metadata — no Spark job (the guard
-    check runs at query-construction time, so plan-only tooling like
-    dump_plans/audit_joins must not trigger a scan).  Falls back to a
-    Spark count for non-local/multi-file layouts."""
+def _table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of input table ``name`` from parquet FOOTER metadata — no
+    Spark job (the guard check runs at query-construction time, so
+    plan-only tooling like dump_plans/audit_joins must not trigger a scan).
+    Falls back to a Spark count for non-local/multi-file layouts."""
     import glob
     import os
 
+    path = f"{sf_dir}/{name}.parquet"
     try:
         import pyarrow.parquet as pq
 
@@ -192,7 +193,7 @@ def _parquet_row_count(spark: SparkSession, path: str) -> int:
             return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         pass
-    return spark.read.parquet(path).count()
+    return read_table(spark, sf_dir, name).count()
 
 
 def dedup_embedding_cosine(
@@ -208,7 +209,7 @@ def dedup_embedding_cosine(
     a corpus past ``max_rows`` raises instead of running (route scale
     corpora to ``dedup_embedding_lsh`` below — identical output contract,
     candidates from a band-key equality join instead of all pairs)."""
-    n = _parquet_row_count(spark, f"{sf_dir}/embeddings.parquet")
+    n = _table_row_count(spark, sf_dir, "embeddings")
     if n > max_rows:
         raise ValueError(
             f"dedup_embedding_cosine is the all-pairs ground-truth oracle "

@@ -28,9 +28,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import TABLE_SCHEMAS, ensure_materialized, materialization_path, read_table
 from ..operators.registry import register
-
-_Q_STREAM_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 
 
 def _serve_stage_cache(spark: SparkSession, sf_dir: str) -> str:
@@ -38,7 +37,6 @@ def _serve_stage_cache(spark: SparkSession, sf_dir: str) -> str:
     (the _frontier_stage_cache / _seed_cache discipline): each invocation
     streams the cached files with a FRESH checkpoint, so the benchmarked
     cost is the ADC serve path, not two coalesce(1) staging writes."""
-    from ..io import ensure_materialized, materialization_path, read_table
     from ..operators.similarity import N_QUERIES
 
     path = materialization_path(
@@ -122,7 +120,7 @@ def stream_ann_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     q = (
-        sib.readStream.schema(_Q_STREAM_SCHEMA)
+        sib.readStream.schema(TABLE_SCHEMAS["embeddings"])
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .writeStream.foreachBatch(serve)

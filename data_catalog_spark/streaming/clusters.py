@@ -36,11 +36,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import TABLE_SCHEMAS, ensure_materialized, materialization_path, read_table
 from ..operators.registry import register
-
-_DOC_STREAM_SCHEMA = (
-    "doc_id bigint, text string, lang string, source string, n_chars bigint"
-)
 
 
 def _clst_stage_cache(spark: SparkSession, sf_dir: str) -> str:
@@ -49,7 +46,6 @@ def _clst_stage_cache(spark: SparkSession, sf_dir: str) -> str:
     discipline): each invocation streams the cached files with a FRESH
     checkpoint, so the benchmarked cost is the probe+merge loop, not two
     coalesce(1) staging writes per run."""
-    from ..io import ensure_materialized, materialization_path, read_table
     from ..operators.dedup import NEW_BATCH_MOD
 
     path = materialization_path(
@@ -163,7 +159,7 @@ def stream_cluster_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["sigs"] = sigs
 
     q = (
-        sib.readStream.schema(_DOC_STREAM_SCHEMA)
+        sib.readStream.schema(TABLE_SCHEMAS["documents"])
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .writeStream.foreachBatch(merge)

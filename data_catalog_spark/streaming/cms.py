@@ -24,6 +24,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import TABLE_SCHEMAS, read_table
 from ..operators.registry import register
 from ..operators.sketches import (
     cms_build,
@@ -31,10 +32,6 @@ from ..operators.sketches import (
     hh_probe,
 )
 from ..operators.text import SPARK_TOKENS
-
-DOCS_STREAM_SCHEMA = (
-    "doc_id bigint, text string, lang string, source string, n_chars bigint"
-)
 
 
 def merge_sketch_into(out_dir: str):
@@ -48,7 +45,9 @@ def merge_sketch_into(out_dir: str):
         target = os.path.join(out_dir, "sketch")
         recover_target(target)
         if os.path.exists(target):
-            current = batch_df.sparkSession.read.parquet(target)
+            current = batch_df.sparkSession.read.schema(partial.schema).parquet(
+                target
+            )
             merged = (
                 current.unionByName(partial)
                 .groupBy("seed", "bucket")
@@ -74,7 +73,7 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out_dir = tempfile.mkdtemp(prefix="cms-merge-")
     raw = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
+        spark.readStream.schema(TABLE_SCHEMAS["documents"])
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
@@ -88,9 +87,11 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # probe vocabulary + stream total from ONE tokenize scan (the exact
     # count table the batch CMS probe also uses), not count + distinct
-    sketch = spark.read.parquet(os.path.join(out_dir, "sketch"))
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     tokens = docs.select(F.explode(F.expr(SPARK_TOKENS)).alias("tok"))
+    sketch = spark.read.schema(cms_build(tokens).schema).parquet(
+        os.path.join(out_dir, "sketch")
+    )
     counts = (
         tokens.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -93,13 +93,11 @@ register("stream_dedup_type_stats", stream_dedup_type_stats, STREAM_DEDUP_ORACLE
 # arm's oracle verbatim; the driver entry splits the new slice across TWO
 # micro-batches (maxFilesPerTrigger=1) to prove it.
 
-_EMB_STREAM_SCHEMA = "vec_id bigint, embedding array<float>, label int"
-
 
 def stream_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..io import read_table
+    from ..io import TABLE_SCHEMAS, read_table
     from ..operators.similarity import (
         EMB_NEW_MOD,
         _band_bits,
@@ -157,7 +155,7 @@ def stream_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     q = (
-        spark.readStream.schema(_EMB_STREAM_SCHEMA)
+        spark.readStream.schema(TABLE_SCHEMAS["embeddings"])
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .writeStream.foreachBatch(probe)

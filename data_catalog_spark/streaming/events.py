@@ -19,38 +19,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-def _ts_unit(stage_dir: str) -> str:
-    """Probe the ``ts`` storage unit from the parquet footers in the
-    directory — a driver-side metadata read (no data I/O), done once at
+def _ts_unit(path: str) -> str:
+    """Probe the ``ts`` storage unit from the parquet footers at ``path``
+    (one file, or every file of a stream stage directory) — a pyarrow
+    metadata read (no data I/O, no Spark job), done once at read or
     stream-definition time.  The driver has shipped events.parquet both as
-    TIMESTAMP(NANOS) and TIMESTAMP(MICROS) across rounds; a declared-schema
-    streaming source can't adapt per-file, so we pin the unit up front and
-    REQUIRE every file already in the directory to agree (a mixed-unit
-    stage would silently misread later files otherwise)."""
+    TIMESTAMP(NANOS) and TIMESTAMP(MICROS) across rounds; a declared schema
+    can't adapt per-file, so we pin the unit up front and REQUIRE every
+    file already in a stage directory to agree (a mixed-unit stage would
+    silently misread later files otherwise)."""
     import os
 
     import pyarrow.parquet as pq
 
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        names = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        files = [os.path.join(path, f) for f in names]
     units = {}
-    for f in sorted(f for f in os.listdir(stage_dir) if f.endswith(".parquet")):
-        t = pq.ParquetFile(os.path.join(stage_dir, f)).schema_arrow.field("ts").type
-        units[f] = getattr(t, "unit", "us")
+    for f in files:
+        t = pq.ParquetFile(f).schema_arrow.field("ts").type
+        units[os.path.basename(f)] = getattr(t, "unit", "us")
     distinct = set(units.values())
     if not distinct:
         raise ValueError(
-            f"no parquet files in stream stage dir {stage_dir} — cannot "
+            f"no parquet files in stream stage dir {path} — cannot "
             f"probe the ts unit (misconfigured or not-yet-staged directory)"
         )
     if len(distinct) > 1:
         raise ValueError(
-            f"mixed ts units in stream stage dir {stage_dir}: {units} — "
+            f"mixed ts units in stream stage dir {path}: {units} — "
             f"a declared-schema source needs one unit per directory"
         )
     return next(iter(distinct))
 
 
 def events_stream_schema(ts_unit: str) -> T.StructType:
-    """Explicit source schema (streaming reads cannot infer).  ``ts`` is
+    """The events table's one declared schema, for the batch read
+    (``io.read_table``) and the stream source alike.  ``ts`` is
     LongType when the files store TIMESTAMP(NANOS) (surfaced as raw int64 by
     ``spark.sql.legacy.parquet.nanosAsLong``), TimestampNTZType for µs/ms."""
     ts_type = T.LongType() if ts_unit == "ns" else T.TimestampNTZType()

@@ -14,21 +14,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from ..io import TABLE_SCHEMAS
 from ..operators.quality_model import _logit_ctes, score_documents
 from ..operators.registry import register
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table (symlink staging dir,
@@ -42,7 +31,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(sf_dir, "documents.parquet"),
         os.path.join(stage, "documents.parquet"),
     )
-    return spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(stage)
+    return spark.readStream.schema(TABLE_SCHEMAS["documents"]).parquet(stage)
 
 
 def quality_profile_stream(docs: DataFrame) -> DataFrame:

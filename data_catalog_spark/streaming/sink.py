@@ -60,7 +60,9 @@ def merge_batch_into(spark: SparkSession, out_dir: str):
         target = os.path.join(out_dir, "table")
         recover_target(target)
         if os.path.exists(target):
-            current = batch_df.sparkSession.read.parquet(target)
+            current = batch_df.sparkSession.read.schema(batch_df.schema).parquet(
+                target
+            )
             keys = batch_df.select(*MERGE_KEYS)
             merged = current.join(keys, MERGE_KEYS, "left_anti").unionByName(batch_df)
         else:
@@ -80,18 +82,18 @@ def stream_rollup_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.iloc[:mid].to_parquet(os.path.join(stage, "part-0.parquet"), index=False)
     df.iloc[mid:].to_parquet(os.path.join(stage, "part-1.parquet"), index=False)
 
-    events = events_stream_source(spark, stage)
+    rollup = hourly_rollup_stream(events_stream_source(spark, stage))
     out_dir = tempfile.mkdtemp(prefix="rollup-merge-")
     q = (
-        hourly_rollup_stream(events)
-        .writeStream.foreachBatch(merge_batch_into(spark, out_dir))
+        rollup.writeStream.foreachBatch(merge_batch_into(spark, out_dir))
         .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     return (
-        spark.read.parquet(os.path.join(out_dir, "table"))
+        spark.read.schema(rollup.schema)
+        .parquet(os.path.join(out_dir, "table"))
         .select("hour", "event_type", "n_events", "sum_value")
         .orderBy("hour", "event_type")
     )

@@ -58,6 +58,8 @@ from .io import materialization_path
 from .query.compiler import CompiledQuery
 
 TITLE_GRAM = 3
+# one row per (field, gram, id); ``field`` is the hive partition column
+POSTINGS_SCHEMA = "gram STRING, id STRING, field STRING"
 
 
 def text_index_path(sf_dir: str) -> str:
@@ -125,7 +127,7 @@ def text_candidates(
     idx = (
         index_path
         if isinstance(index_path, DataFrame)
-        else spark.read.parquet(index_path)
+        else spark.read.schema(POSTINGS_SCHEMA).parquet(index_path)
     )
     q = text.lower()
     arms: list[DataFrame] = []
@@ -186,7 +188,7 @@ def stem_candidates(
     idx = (
         index_path
         if isinstance(index_path, DataFrame)
-        else spark.read.parquet(index_path)
+        else spark.read.schema(POSTINGS_SCHEMA).parquet(index_path)
     )
     return (
         idx.where((F.col("field") == "title_stem") & F.col("gram").isin(stemmed_terms))
@@ -626,7 +628,7 @@ class SegmentedTextIndex:
         for rec in self._manifest():
             # explicit schema: an empty segment (zero-row upsert / compact
             # of an empty index) has no footers to infer from
-            df = self.spark.read.schema("gram STRING, id STRING, field STRING").parquet(
+            df = self.spark.read.schema(POSTINGS_SCHEMA).parquet(
                 os.path.join(self._seg_dir(rec["name"]), "postings")
             )
             if rec["ts_dir"]:
@@ -635,9 +637,7 @@ class SegmentedTextIndex:
                 df = df.where(~F.col("id").isin(rec["ts_inline"]))
             parts.append(df.select("gram", "id", "field"))
         if not parts:
-            return self.spark.createDataFrame(
-                [], "gram string, id string, field string"
-            )
+            return self.spark.createDataFrame([], POSTINGS_SCHEMA)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -660,9 +660,9 @@ class SegmentedTextIndex:
                 os.path.join(self._seg_dir(name), "postings")
             )
             lk.heartbeat()  # the merge write is the longest section here
-            merged = self.spark.read.schema(
-                "gram STRING, id STRING, field STRING"
-            ).parquet(os.path.join(self._seg_dir(name), "postings"))
+            merged = self.spark.read.schema(POSTINGS_SCHEMA).parquet(
+                os.path.join(self._seg_dir(name), "postings")
+            )
             merged.select("id").distinct().write.mode("overwrite").parquet(
                 os.path.join(self._seg_dir(name), "ids")
             )

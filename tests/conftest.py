@@ -97,3 +97,30 @@ def assert_same(spark_df, ddb_con, sql):
     got = normalize([tuple(r) for r in spark_df.collect()])
     want = normalize(ddb_con.execute(sql).fetchall())
     assert got == want, f"spark={got[:5]}... oracle={want[:5]}... (n={len(got)} vs {len(want)})"
+
+
+def spark_work(spark, fn):
+    """(fn(), jobs, stages) of the Spark jobs started while ``fn`` runs: a
+    status-tracker job-id window (ids are dense; the tracker is fed by an
+    asynchronous listener bus, hence the settle sleeps)."""
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job_id(after):
+        last, probe, misses = after, after + 1, 0
+        while misses < 20:
+            if tracker.getJobInfo(probe) is None:
+                misses += 1
+            else:
+                last, misses = probe, 0
+            probe += 1
+        return last
+
+    time.sleep(0.5)
+    first = last_job_id(max(tracker.getJobIdsForGroup(None), default=-1))
+    out = fn()
+    time.sleep(0.5)
+    ids = range(first + 1, last_job_id(first) + 1)
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in ids)
+    return out, len(ids), stages

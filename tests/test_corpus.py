@@ -6,7 +6,7 @@ import pytest
 
 from data_catalog_spark.operators import corpus, dedup
 
-from conftest import assert_same
+from conftest import assert_same, spark_work
 
 
 def test_corpus_filter_parity(spark, sf_dir, ddb):
@@ -178,33 +178,6 @@ def test_star_check_accepts_star_forest(spark):
     assert spark.sql(corpus._STAR_VIOLATIONS_SQL).isEmpty()
 
 
-def _spark_work(spark, fn):
-    """(fn(), jobs, stages) of the Spark jobs started while ``fn`` runs: a
-    status-tracker job-id window (ids are dense; the tracker is fed by an
-    asynchronous listener bus, hence the settle sleeps)."""
-    import time
-
-    tracker = spark.sparkContext.statusTracker()
-
-    def last_job_id(after):
-        last, probe, misses = after, after + 1, 0
-        while misses < 20:
-            if tracker.getJobInfo(probe) is None:
-                misses += 1
-            else:
-                last, misses = probe, 0
-            probe += 1
-        return last
-
-    time.sleep(0.5)
-    first = last_job_id(max(tracker.getJobIdsForGroup(None), default=-1))
-    out = fn()
-    time.sleep(0.5)
-    ids = range(first + 1, last_job_id(first) + 1)
-    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in ids)
-    return out, len(ids), stages
-
-
 # Jobs and stages of one _connected_components(...).collect(), measured at
 # local[1] and local[4]: the convergence check must stay at 2 jobs per
 # round (the grouped statement's map stage and its isEmpty result job).
@@ -218,7 +191,7 @@ def _spark_work(spark, fn):
     ids=["star_forest", "bridged_stars", "chain64"],
 )
 def test_connected_components_job_pins(spark, edges, max_jobs, max_stages):
-    got, jobs, stages = _spark_work(spark, lambda: _cc_labels(spark, edges))
+    got, jobs, stages = spark_work(spark, lambda: _cc_labels(spark, edges))
     assert got == _union_find_labels(edges)
     assert jobs <= max_jobs
     assert stages <= max_stages
